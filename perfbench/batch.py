@@ -8,7 +8,7 @@ and streaming rows).  Each registry row is built by its
 ``__spark_entry__.queries()`` callable and forced through the noop
 sink.
 
-The untimed warm-up pass collects every registry row instead of
+The first untimed warm-up pass collects every registry row instead of
 sinking it, and after the timed passes each of those results is
 compared with its DuckDB ``oracle_sql()`` twin using the comparison in
 ``tools/check_correctness.py``; the counter table the ``HJob`` writes
@@ -22,7 +22,7 @@ import itertools
 import os
 import time
 
-from harness import Op
+from harness import Op, job_group
 
 JOBS = (
     "a1_groupby_rollup_sum",
@@ -50,11 +50,6 @@ ROLLUP_SQL = """
 
 def set_of(name: str) -> str:
     return "operators" if name in OPERATORS else "jobs"
-
-
-def row_group(pass_id: int, name: str) -> str:
-    """The Spark job group of one row of one pass."""
-    return f"pb-{pass_id}-{name}"
 
 
 def pass_ops(first_id: int = 0):
@@ -124,7 +119,7 @@ def run_pass(spark, entry_queries, data_dir: str, job, tracer, op: Op, keep: dic
     sc = spark.sparkContext
     out = {}
     for name in PASS:
-        sc.setJobGroup(row_group(op.op_id, name), name)
+        sc.setJobGroup(job_group(op.op_id, name), name)
         t0 = time.perf_counter()
         try:
             if name == HJOB:

@@ -1,12 +1,14 @@
 """Measurement pieces shared by every workload.
 
 - :func:`closed_loop` — the one timing loop: a single client thread runs
-  a pre-generated op list back to back until the time budget is spent,
-  timing each op and tagging its Spark jobs with a per-op job group.
+  a pre-generated op list back to back until the time budget is spent
+  (stopping only between blocks of ops), timing each op and tagging its
+  Spark jobs with a per-op job group.
 - :func:`tail` / :func:`median` — latency statistics, including the
   tail rule (the highest percentile with at least ``min_beyond``
   samples beyond it).
-- :func:`calibration_s` / :func:`load_1m` — the host guard.
+- :func:`calibration_s` / :func:`drift` / :func:`load_1m` /
+  :func:`steal_share` — the host guard.
 - :func:`peak_rss_mb` / :func:`space_amp` — process memory and on-disk
   amplification, read from ``/proc`` and ``os.stat``.
 """
@@ -28,6 +30,7 @@ class Op:
     kind: str  # e.g. "get", "multi_get_1000", "put"
     cls: str  # the latency class it reports under: read / write / jobs / operators
     args: dict
+    block: int | None = None  # ops of one block run together; None: a block of its own
 
 
 @dataclasses.dataclass
@@ -38,8 +41,9 @@ class OpResult:
     error: str | None = None
 
 
-def job_group(op: Op) -> str:
-    return f"pb-{op.op_id}-{op.kind}"
+def job_group(op_id: int, name: str) -> str:
+    """The Spark job group of one op (or of one named part of it)."""
+    return f"pb-{op_id}-{name}"
 
 
 def closed_loop(
@@ -50,8 +54,9 @@ def closed_loop(
     after_op: Callable[[OpResult], None] | None = None,
 ) -> tuple[list[OpResult], float]:
     """Run ``ops`` in order, one at a time, until ``seconds`` have
-    passed (an op that starts before the deadline runs to its end; at
-    least one op always runs).  Returns the per-op results and the
+    passed.  The loop only stops before an op that starts a new block,
+    so every block it begins runs to its end and at least one block
+    always runs.  Returns the per-op results and the
     wall-clock of the loop.  An exception fails only its own op.
     ``after_op`` sees each result after its op's clock has stopped."""
     sc = spark.sparkContext if spark is not None else None
@@ -59,10 +64,11 @@ def closed_loop(
     t0 = time.perf_counter()
     deadline = t0 + seconds
     for op in ops:
-        if results and time.perf_counter() >= deadline:
+        if results and time.perf_counter() >= deadline and (
+                op.block is None or op.block != results[-1].op.block):
             break
         if sc is not None:
-            sc.setJobGroup(job_group(op), op.kind)
+            sc.setJobGroup(job_group(op.op_id, op.kind), op.kind)
         start = time.perf_counter()
         try:
             value, error = run_op(op), None
@@ -114,6 +120,28 @@ def calibration_s(spark, rows: int = 5_000_000, reps: int = 3) -> float:
         ).collect()
         best = min(best, time.perf_counter() - t0)
     return best
+
+
+def drift(start_s: float, end_s: float) -> float:
+    """How far two calibration probes disagree, whichever was slower."""
+    return max(end_s / start_s, start_s / end_s) - 1
+
+
+def cpu_jiffies() -> tuple[int, int]:
+    """``(steal, total)`` CPU time of the host so far, from ``/proc/stat``
+    (steal: time the hypervisor gave this machine's CPUs to others)."""
+    try:
+        with open("/proc/stat") as fh:
+            fields = [int(x) for x in fh.readline().split()[1:]]
+    except (OSError, ValueError):
+        return 0, 0
+    return (fields[7] if len(fields) > 7 else 0), sum(fields[:8])
+
+
+def steal_share(before: tuple[int, int], after: tuple[int, int]) -> float:
+    """The share of CPU time stolen between two :func:`cpu_jiffies` readings."""
+    total = after[1] - before[1]
+    return (after[0] - before[0]) / total if total > 0 else 0.0
 
 
 def load_1m() -> float:

@@ -7,13 +7,15 @@ family, a ``cnt`` counter family and a ``lines`` map family
 characters (100 ``_kp=`` directories).  Row keys are salted order keys,
 ``f"{k % 100:02d}{k:07d}"``.
 
-Ops run in fixed-order blocks so any prefix of the op list has the same
-mix; the seed picks keys (zipf-skewed), ranges and written values.  A
-block is a put/increment/delete batch through ``OpBase.execute``, gets
-and multi-gets of the keys it just wrote, and the read mix: point gets
-(some through a ``TestCache``), a rowkey-range scan, a filtered read
-with F16 pagination or an F20 time range, and a 1000-key multi-get
-(above ``ISIN_THRESHOLD``, so the broadcast semi-join path).
+Ops run in fixed-order blocks of twelve, and the timed loop only stops
+between blocks, so every run covers every op kind in the same mix; the
+seed picks keys (zipf-skewed), ranges and written values.  A block
+holds one put, one delete and one increment batch through
+``OpBase.execute``, each followed by a read of keys it just wrote, and
+the read mix: cached gets (``TestCache``), a 1000-key multi-get (above
+``ISIN_THRESHOLD``, so the broadcast semi-join path), a rowkey-range
+scan, and filtered reads with F16 pagination and with an F20 time
+range.
 
 After the timed loop every result is compared with a dict model: the
 rows pandas reads from the source parquet files, with every applied
@@ -42,11 +44,11 @@ ALL = META + ("views", "lines")
 META_CNT = META + ("views",)
 META_LINES = META + ("lines",)
 
-# one block of ops, in the order it runs (see kv_ops); every third
-# block appends a 1000-key multi-get
-BLOCK = ("write", "get", "multi_get_10", "cget", "scan", "get", "filter", "cget")
-WRITE_SIZES = (1, 5, 20, 50, 2, 10)
-WRITE_KINDS = ("put", "increment", "put", "delete", "increment", "put")
+# one block of ops, in the order it runs (see kv_ops)
+BLOCK = ("put", "get", "multi_get_1000", "cget", "delete", "get",
+         "filter_page", "filter_time", "increment", "multi_get_10", "scan", "cget")
+WRITES = ("put", "delete", "increment")
+WRITE_SIZES = (5, 2, 20, 50, 1, 10)  # keys per batch, cycling over the write ops
 
 
 def rowkey(k: int) -> str:
@@ -245,8 +247,7 @@ class KeyPicker:
                 "t_hi": BASE_TS + _dt.timedelta(seconds=k + 700)}
 
 
-def write_batch(op_id: int, b: int, pick: KeyPicker) -> Op:
-    n, kind = WRITE_SIZES[b % len(WRITE_SIZES)], WRITE_KINDS[b % len(WRITE_KINDS)]
+def write_args(kind: str, n: int, pick: KeyPicker) -> dict:
     keys = pick.keys(n)
     rng = pick.rng
     cells = {}
@@ -259,44 +260,53 @@ def write_batch(op_id: int, b: int, pick: KeyPicker) -> Op:
             }
         elif kind == "increment":
             cells[k] = {"views": int(rng.integers(1, 6))}
-    return Op(op_id, kind, "write", {"keys": keys, "cells": cells})
+    return {"keys": keys, "cells": cells}
 
 
 def kv_ops(seed: int, n_orders: int, stream: int = 2, first_id: int = 0):
-    """The op list, block after block (see :data:`BLOCK`).  Writes and
-    their read-your-writes reads use salts 0-49; cached gets, scans and
-    filtered reads use salts 50-99, which are never written (so cached
-    rows never go stale and cell timestamps stay the staged ones); the
-    plain get and the 1000-key multi-get draw from every key."""
+    """The op list, block after block (see :data:`BLOCK`).  A get or
+    10-key multi-get reads the keys of the write batch just before it.
+    Writes use salts 0-49; cached gets, scans and filtered reads use
+    salts 50-99, which are never written (so cached rows never go stale
+    and cell timestamps stay the staged ones); the 1000-key multi-get
+    draws from every key."""
     rng = np.random.default_rng([seed, stream])
     written = KeyPicker(rng, n_orders, range(0, 50))
     stable = KeyPicker(rng, n_orders, range(50, 100))
     anyk = KeyPicker(rng, n_orders)
+    sizes = itertools.cycle(WRITE_SIZES)
     op_id = first_id
+    keys: list[str] = []
     for b in itertools.count():
-        w = write_batch(op_id, b, written)
-        keys = w.args["keys"]
-        block = [
-            w,
-            Op(op_id + 1, "get", "read", {"key": keys[0]}),
-            Op(op_id + 2, "multi_get_10", "read", {"keys": keys[:10], "fields": META_CNT}),
-            Op(op_id + 3, "cget", "read", {"key": stable.cached_key()}),
-            Op(op_id + 4, "scan", "read", stable.range()),
-            Op(op_id + 5, "get", "read", {"key": anyk.key()}),
-            Op(op_id + 6, ("filter_page", "filter_time")[b % 2], "read", stable.range()),
-            Op(op_id + 7, "cget", "read", {"key": stable.cached_key()}),
-        ]
-        if b % 3 == 2:
-            block.append(Op(op_id + 8, "multi_get_1000", "read", {"keys": anyk.keys(1000), "fields": META}))
-        yield from block
-        op_id += len(block)
+        for kind in BLOCK:
+            if kind in WRITES:
+                args = write_args(kind, next(sizes), written)
+                keys = args["keys"]
+            elif kind == "get":
+                args = {"key": keys[0]}
+            elif kind == "multi_get_10":
+                args = {"keys": keys[:10], "fields": META_CNT}
+            elif kind == "multi_get_1000":
+                args = {"keys": anyk.keys(1000), "fields": META}
+            elif kind == "cget":
+                args = {"key": stable.cached_key()}
+            else:  # scan, filter_page, filter_time
+                args = stable.range()
+            yield Op(op_id, kind, "write" if kind in WRITES else "read", args, block=b)
+            op_id += 1
 
 
-def warm_ops(seed: int, n_orders: int, n: int = 5) -> list[Op]:
-    """The first ``n`` ops of the op list of a seed stream of its own
+def warm_ops(seed: int, n_orders: int) -> list[Op]:
+    """The first block of the op list of a seed stream of its own
     (negative op ids).  Run before timing and applied to the model like
     any op."""
-    return list(itertools.islice(kv_ops(seed, n_orders, stream=3, first_id=-1000), n))
+    return list(itertools.islice(kv_ops(seed, n_orders, stream=3, first_id=-1000), len(BLOCK)))
+
+
+def timed_ops(seed: int, n_orders: int, first_id: int = 0, blocks: int = 16) -> list[Op]:
+    """The timed op list, generated in full before timing starts: more
+    blocks than any run reaches."""
+    return list(itertools.islice(kv_ops(seed, n_orders, first_id=first_id), blocks * len(BLOCK)))
 
 
 # -- running an op ------------------------------------------------------------------------

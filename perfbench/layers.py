@@ -10,7 +10,7 @@ from __future__ import annotations
 import statistics
 from collections import defaultdict
 
-from harness import OpResult, job_group, median
+from harness import OpResult, drift, job_group, median
 from tracing import Tracer, sum_groups
 
 END_TO_END = (
@@ -93,6 +93,7 @@ PER_LAYER = (
     ("host.calibration_s", "s"),
     ("host.calibration_drift", "ratio"),
     ("host.load_1m_max", "load"),
+    ("host.steal_share", "ratio"),
     ("trace.ops_per_s", "1/s"),
     ("trace.latency_p50_ms", "ms"),
     ("trace.spans_per_op", "count"),
@@ -123,7 +124,8 @@ def per_layer(results: list[OpResult], tracer: Tracer, groups: dict, extra: dict
     (the ``TestCache`` or None), ``commits`` (snapshot diffs with the
     batch bytes), ``snapshots``, ``space_amp``, ``stream`` (the
     listener), ``passes`` and ``row_groups`` (batch: the job groups of
-    each set's rows), the host guard readings and the loop's ``wall``.
+    each set's rows), the host guard readings, the loop's ``wall`` and
+    ``attempted`` (the numerator of the untraced ``ops_per_s``).
     Spark executor figures are per op (per pass on batch_pipeline)."""
     ids = {r.op.op_id for r in results}
     spans = tracer.by_name(ids)
@@ -159,8 +161,8 @@ def per_layer(results: list[OpResult], tracer: Tracer, groups: dict, extra: dict
 
     reads = [r for r in results if r.op.cls == "read"]
     writes = [r for r in results if r.op.cls == "write"]
-    g_reads = sum_groups(groups, [job_group(r.op) for r in reads])
-    g_writes = sum_groups(groups, [job_group(r.op) for r in writes])
+    g_reads = sum_groups(groups, [job_group(r.op.op_id, r.op.kind) for r in reads])
+    g_writes = sum_groups(groups, [job_group(r.op.op_id, r.op.kind) for r in writes])
     if reads:
         m["query.jobs_per_read"] = g_reads["jobs"] / len(reads)
         m["query.tasks_per_read"] = g_reads["tasks"] / len(reads)
@@ -195,7 +197,7 @@ def per_layer(results: list[OpResult], tracer: Tracer, groups: dict, extra: dict
         m["streaming.trigger_ms"] = median(listener.trigger_ms)
         m["streaming.state_rows"] = max(listener.state_rows)
 
-    all_groups = [job_group(r.op) for r in results]
+    all_groups = [job_group(r.op.op_id, r.op.kind) for r in results]
     for names in (extra.get("row_groups") or {}).values():
         all_groups += names
     g_all = sum_groups(groups, all_groups)
@@ -208,9 +210,10 @@ def per_layer(results: list[OpResult], tracer: Tracer, groups: dict, extra: dict
         m[f"share.{layer}"] = shares.get(layer, 0.0) / total if total else 0.0
 
     m["host.calibration_s"] = extra["cal_start"]
-    m["host.calibration_drift"] = extra["cal_end"] / extra["cal_start"]
+    m["host.calibration_drift"] = drift(extra["cal_start"], extra["cal_end"])
     m["host.load_1m_max"] = extra["load_max"]
-    m["trace.ops_per_s"] = len(results) / extra["wall"]
+    m["host.steal_share"] = extra["steal"]
+    m["trace.ops_per_s"] = extra["attempted"] / extra["wall"]  # the untraced ops_per_s, traced
     m["trace.latency_p50_ms"] = _ms([r.seconds for r in results])
     m["trace.spans_per_op"] = sum(1 for s in tracer.spans if s.op_id in ids) / len(results)
     m["trace.attribution_gap_ms"] = _ms(attribution_gaps(results, tracer))

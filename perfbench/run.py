@@ -11,7 +11,8 @@ Run from the root of a checkout.  Workloads:
 
 Inputs are generated from ``--seed`` into a work directory inside the
 checkout, which is removed at the end.  One client thread times ops
-back to back for ``--seconds``; outputs are checked afterwards.  The
+back to back for ``--seconds`` (then finishes the block of ops it is
+in); outputs are checked afterwards.  The
 last stdout line is one JSON object: ``correct``, ``attempted``,
 ``failed`` and ``metrics`` — the end-to-end metrics with ``--trace 0``;
 with ``--trace 1`` the per-layer metrics of a traced run (spans around
@@ -23,6 +24,7 @@ import time
 T_START = time.perf_counter()
 
 import argparse  # noqa: E402
+import itertools  # noqa: E402
 import json  # noqa: E402
 import math  # noqa: E402
 import os  # noqa: E402
@@ -34,8 +36,9 @@ ROOT = os.path.dirname(HERE)
 WORKLOADS = ("kv_mixed", "batch_pipeline")
 SF = 0.01  # scale of the generated tables: 15,000 orders
 HEAP_GB = 1  # driver JVM heap
-SETUP_REPS = 3  # set-up is repeated and its median reported
-GUARD = 0.25  # calibration drift (end / start - 1) that triggers one re-run: the metrics' bound
+GUARD = 0.25  # calibration drift (slower / faster probe - 1) that triggers one re-run: the metrics' bound
+RERUN_ID = 1_000_000  # first op id of a re-run, so its ops and job groups stay apart
+WARM_PASSES = 2  # batch_pipeline: untimed passes before the timed loop
 BUDGET_S = 170.0  # a guard re-run only starts if it fits in this
 
 
@@ -67,9 +70,13 @@ class Context:
         self.loads = [harness.load_1m()]
         self.spark = None
         self.cal_start = self.cal_end = math.nan
+        self.steal = math.nan  # share of CPU time stolen by other tenants during the timed loop
+        self.setup_s = math.nan
+        self.host_degraded = False
         self.tracer = None
 
     def start(self) -> None:
+        import harness
         from hpaste_spark import get_spark
 
         args = self.args
@@ -90,6 +97,7 @@ class Context:
         self.spark = get_spark("perfbench", master=f"local[{self.cpus}]",
                                shuffle_partitions=self.cpus, extra_conf=conf)
         self.spark.sparkContext.setLogLevel("ERROR")
+        harness.calibration_s(self.spark, reps=1)  # compile the probe before it measures
         self.session_s = time.perf_counter() - T_START
         if args.trace:
             import tracing
@@ -101,17 +109,19 @@ class Context:
 
         return SparkContext._gateway.proc
 
-    def make_data(self, sf: float, rep: int) -> str:
+    def make_data(self) -> str:
         import datagen
 
-        out = os.path.join(self.work, f"{self.data_name}{rep}" if rep else self.data_name)
-        datagen.write(datagen.generate(self.args.seed, sf), out)
+        out = os.path.join(self.work, self.data_name)
+        datagen.write(datagen.generate(self.args.seed, SF), out)
         return out
 
-    def timed(self, ops, run_op, after_op=None):
-        """The timed loop plus the host guard: calibrate after it, and if
-        the host drifted past ``GUARD`` run the loop once more (when it
-        fits the time budget).  Returns ``(discarded, results, wall)``."""
+    def timed(self, make_ops, run_op, after_op=None):
+        """The timed loop plus the host guard: calibrate before and after
+        it, and if the probes drift apart past ``GUARD`` run the loop once
+        more on a fresh op list, ``make_ops(RERUN_ID)`` (when it fits the
+        time budget).  ``setup_s`` is the process's age when the first
+        timed op starts.  Returns ``(discarded, results, wall)``."""
         import harness
 
         tr = self.tracer
@@ -131,17 +141,24 @@ class Context:
         try:
             fn = traced if tr is not None else run_op
             discarded = []
+            ops = make_ops(0)
+            self.setup_s = time.perf_counter() - T_START
+            cpu0 = harness.cpu_jiffies()
             results, wall = harness.closed_loop(ops, self.args.seconds, fn, self.spark, after_op)
+            self.steal = harness.steal_share(cpu0, harness.cpu_jiffies())
             self.loads.append(harness.load_1m())
             self.cal_end = harness.calibration_s(self.spark)
             elapsed = time.perf_counter() - T_START
-            if self.cal_end / self.cal_start - 1 > GUARD and elapsed + 2 * wall + 30 < BUDGET_S:
-                log(f"host drift {self.cal_end / self.cal_start:.2f}x over the loop; re-running it once")
+            if harness.drift(self.cal_start, self.cal_end) > GUARD and elapsed + 2 * wall + 30 < BUDGET_S:
+                log(f"host drift: calibration {self.cal_start:.3f}s -> {self.cal_end:.3f}s; re-running the loop once")
                 discarded = results
-                results, wall = harness.closed_loop(ops, self.args.seconds, fn, self.spark, after_op)
+                self.cal_start = self.cal_end
+                cpu0 = harness.cpu_jiffies()
+                results, wall = harness.closed_loop(make_ops(RERUN_ID), self.args.seconds, fn, self.spark, after_op)
+                self.steal = harness.steal_share(cpu0, harness.cpu_jiffies())
+                self.loads.append(harness.load_1m())
                 self.cal_end = harness.calibration_s(self.spark)
-            if self.cal_end / self.cal_start - 1 > GUARD:
-                log(f"WARNING host degraded: calibration {self.cal_start:.3f}s -> {self.cal_end:.3f}s")
+            self.host_degraded = harness.drift(self.cal_start, self.cal_end) > GUARD
         finally:
             if tr is not None:
                 tr.restore()
@@ -149,9 +166,8 @@ class Context:
         return discarded, results, wall
 
     def close(self) -> dict:
-        """Stop Spark and wait for the JVM to exit (a no-op when it is not
-        running); returns the event-log aggregates by job group (empty
-        when not tracing)."""
+        """Stop Spark and wait for the JVM to exit; returns the event-log
+        aggregates by job group (empty when not tracing)."""
         import tracing
         from pyspark import SparkContext
 
@@ -190,18 +206,6 @@ class Context:
 # -- workloads ------------------------------------------------------------------------------
 
 
-def stage_reps(stage_one) -> float:
-    """Run one set-up step ``SETUP_REPS`` times; returns its median seconds."""
-    import harness
-
-    times = []
-    for rep in range(SETUP_REPS):
-        t0 = time.perf_counter()
-        stage_one(rep)
-        times.append(time.perf_counter() - t0)
-    return harness.median(times)
-
-
 def run_kv(ctx) -> dict:
     import harness
     import kv
@@ -209,17 +213,11 @@ def run_kv(ctx) -> dict:
 
     spark, seed = ctx.spark, ctx.args.seed
 
-    def stage_one(rep):
-        data = ctx.make_data(SF, rep)
-        table = kv.make_table(os.path.join(ctx.work, f"kv{rep}"), TestCache())
-        kv.stage(spark, table, data)
-        if rep:  # keep only the first copy's data and table
-            shutil.rmtree(data)
-            shutil.rmtree(table.storage.table_dir)
-
-    stage_s = stage_reps(stage_one)
-    table = kv.make_table(os.path.join(ctx.work, "kv0"), TestCache())
-    data = os.path.join(ctx.work, ctx.data_name)
+    t0 = time.perf_counter()
+    data = ctx.make_data()
+    table = kv.make_table(os.path.join(ctx.work, "kv"), TestCache())
+    kv.stage(spark, table, data)
+    stage_s = time.perf_counter() - t0
     t0 = time.perf_counter()
     rows = kv.Rows(kv.base_rows(data))
     expect_s = time.perf_counter() - t0
@@ -229,8 +227,6 @@ def run_kv(ctx) -> dict:
     t0 = time.perf_counter()
     warm, _ = harness.closed_loop(kv.warm_ops(seed, n_orders), math.inf, run, spark)
     warm_s = time.perf_counter() - t0
-    setup_s = ctx.session_s + stage_s + expect_s + warm_s
-    table.cache.hits = table.cache.misses = 0  # count the timed loop only
 
     st = table.storage
     staged = st.snapshot_dir(st.current_version())
@@ -247,7 +243,11 @@ def run_kv(ctx) -> dict:
         commits.append({**harness.snapshot_diff(snap["files"], new), "batch_bytes": kv.write_bytes(r.op)})
         snap["files"] = new
 
-    discarded, results, wall = ctx.timed(kv.kv_ops(seed, n_orders), run, after)
+    def make_ops(first_id):
+        table.cache = TestCache()  # each try starts cold and counts its own hits
+        return kv.timed_ops(seed, n_orders, first_id)
+
+    discarded, results, wall = ctx.timed(make_ops, run, after)
     log(f"timed loop done at {time.perf_counter() - T_START:.1f}s")
 
     # -- checks, in execution order (writes move the model forward)
@@ -265,7 +265,7 @@ def run_kv(ctx) -> dict:
     timed = {r.op.op_id for r in results}
     out = {
         "items": [(r.op.kind, r.op.cls, r.seconds) for r in results],
-        "setup_s": setup_s, "results": results, "wall": wall, "bad": bad, "extra_fail": extra_fail,
+        "results": results, "wall": wall, "bad": bad, "extra_fail": extra_fail,
         "attempted": len(results), "failed": sum(1 for i in timed if i in bad) + len(extra_fail),
         "warm_failed": sum(1 for i in bad if i not in timed),
         "setup_parts": {"session_s": ctx.session_s, "stage_s": stage_s, "expect_s": expect_s, "warm_s": warm_s},
@@ -286,24 +286,21 @@ def run_batch(ctx) -> dict:
     spark = ctx.spark
     queries, oracles = entry.queries(), entry.oracle_sql()
 
-    def stage_one(rep):
-        data = ctx.make_data(SF, rep)
-        if rep:
-            shutil.rmtree(data)
-
-    stage_s = stage_reps(stage_one)
-    data = os.path.join(ctx.work, ctx.data_name)
+    t0 = time.perf_counter()
+    data = ctx.make_data()
+    stage_s = time.perf_counter() - t0
     table = batch.counter_table(os.path.join(ctx.work, "tables"))
     job = batch.click_rollup_job(table, data)
     run = lambda op: batch.run_pass(spark, queries, data, job, ctx.tracer, op)  # noqa: E731
 
+    # untimed warm-up passes; the first collects every row for the checks
     kept: dict = {}
     t0 = time.perf_counter()
     warm, _ = harness.closed_loop(
-        batch.pass_ops(first_id=-1), 0,
-        lambda op: batch.run_pass(spark, queries, data, job, None, op, keep=kept), spark)
+        itertools.islice(batch.pass_ops(first_id=-WARM_PASSES), WARM_PASSES), math.inf,
+        lambda op: batch.run_pass(spark, queries, data, job, None, op,
+                                  keep=kept if op.op_id == -WARM_PASSES else None), spark)
     warm_s = time.perf_counter() - t0
-    setup_s = ctx.session_s + stage_s + warm_s
 
     listener = None
     if ctx.tracer is not None:
@@ -311,7 +308,7 @@ def run_batch(ctx) -> dict:
 
         listener = tracing.stream_listener()
         spark.streams.addListener(listener)
-    discarded, results, wall = ctx.timed(batch.pass_ops(), run)
+    discarded, results, wall = ctx.timed(batch.pass_ops, run)
     if listener is not None:
         spark.streams.removeListener(listener)
     log(f"timed loop done at {time.perf_counter() - T_START:.1f}s")
@@ -338,14 +335,14 @@ def run_batch(ctx) -> dict:
     st = table.storage
     return {
         "items": [(name, batch.set_of(name), sec) for r in results for name, (sec, _e) in rows_of(r).items()],
-        "setup_s": setup_s, "results": results, "wall": wall,
+        "results": results, "wall": wall,
         "attempted": len(timed_rows), "failed": sum(1 for k in timed_rows if k in bad),
         "warm_failed": sum(1 for k in bad if k not in set(timed_rows)), "bad": bad, "extra_fail": [],
         "setup_parts": {"session_s": ctx.session_s, "stage_s": stage_s, "warm_s": warm_s},
         "sizes": {"rows": datagen.sizes(SF), "data_bytes": harness.tree_bytes(data)},
         "per_pass": per_pass,
         "extra": {"stream": listener, "passes": len(results),
-                  "row_groups": {s: [batch.row_group(r.op.op_id, n) for r in results for n in batch.PASS
+                  "row_groups": {s: [harness.job_group(r.op.op_id, n) for r in results for n in batch.PASS
                                      if batch.set_of(n) == s] for s in ("jobs", "operators")},
                   "snapshots": len(st.versions()),
                   "space_amp": harness.space_amp(st.table_dir, st.snapshot_dir(st.current_version()))},
@@ -355,14 +352,14 @@ def run_batch(ctx) -> dict:
 # -- reporting ----------------------------------------------------------------------------
 
 
-def summary_lines(workload: str, out: dict, rss: float) -> list[str]:
+def summary_lines(workload: str, out: dict, setup_s: float, rss: float) -> list[str]:
     """The workload's own end-to-end figures, by the names of the
     benchmark's design: read/write latencies, per-set pass times, the
     error rate and the disk amplification."""
     import harness
 
     lines = [f"workload {workload}: {len(out['results'])} timed ops in {out['wall']:.2f}s, "
-             f"setup {out['setup_s']:.2f}s {json.dumps({k: round(v, 3) for k, v in out['setup_parts'].items()})}",
+             f"setup {setup_s:.2f}s {json.dumps({k: round(v, 3) for k, v in out['setup_parts'].items()})}",
              f"sizes {json.dumps(out['sizes'])}"]
     by_cls: dict[str, list[float]] = {}
     kinds: dict[str, list[float]] = {}
@@ -412,32 +409,37 @@ def main(argv=None) -> int:
         out = run_batch(ctx) if args.workload == "batch_pipeline" else run_kv(ctx)
         rss = harness.peak_rss_mb([os.getpid(), ctx.jvm().pid])
         log(f"checks done at {time.perf_counter() - T_START:.1f}s")
-        groups = ctx.close()
     finally:
-        ctx.close()
+        groups = ctx.close()
         ctx.cleanup()
 
     res = out["results"]
-    for line in summary_lines(args.workload, out, rss):
+    for line in summary_lines(args.workload, out, ctx.setup_s, rss):
         log(line)
     lat = [r.seconds for r in res]
     if args.trace:
         extra = {**out["extra"], "cal_start": ctx.cal_start, "cal_end": ctx.cal_end,
                  "load_max": max(x for x in ctx.loads if not math.isnan(x)) if ctx.loads else 0.0,
-                 "wall": out["wall"]}
+                 "steal": ctx.steal,
+                 "wall": out["wall"], "attempted": out["attempted"]}
         for line in layers.report(args.workload, res, ctx.tracer):
             log(line)
         values = layers.per_layer(res, ctx.tracer, groups, extra)
         units = dict(layers.PER_LAYER)
     else:
         values = {
-            "setup_s": out["setup_s"],
+            "setup_s": ctx.setup_s,
             "ops_per_s": out["attempted"] / out["wall"],
             "latency_p50_ms": 1e3 * harness.median(lat),
             "peak_rss_mb": rss,
         }
         units = dict(layers.END_TO_END)
-    log(f"host calibration {ctx.cal_start:.3f}s -> {ctx.cal_end:.3f}s, load_1m {ctx.loads}")
+    log(f"host calibration {ctx.cal_start:.3f}s -> {ctx.cal_end:.3f}s, load_1m {ctx.loads}, "
+        f"cpu stolen during the loop {100 * ctx.steal:.1f}%")
+    if ctx.host_degraded:
+        drift = harness.drift(ctx.cal_start, ctx.cal_end)
+        log(f"host_degraded: the calibration probes drifted {drift:.2f} apart (guard {GUARD}); "
+            "the figures of this run are suspect")
     result = {
         "correct": out["failed"] == 0 and out["warm_failed"] == 0,
         "attempted": out["attempted"],

@@ -15,6 +15,7 @@ import pytest
 BENCH = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, BENCH)
 
+import batch  # noqa: E402
 import harness  # noqa: E402
 import kv  # noqa: E402
 import layers  # noqa: E402
@@ -45,6 +46,23 @@ def test_tail_falls_back_to_the_median_on_few_samples():
     assert harness.tail([float(i) for i in range(20)])[1] == 50.0
     v, pct, n = harness.tail([])
     assert n == 0
+
+
+# -- host guard ---------------------------------------------------------------------------
+
+
+def test_drift_counts_a_slow_start_like_a_slow_end():
+    assert harness.drift(0.4, 0.5) == pytest.approx(0.25)
+    assert harness.drift(0.5, 0.4) == pytest.approx(0.25)
+    assert harness.drift(0.576, 0.389) > 0.25
+    assert harness.drift(0.3, 0.3) == 0
+
+
+def test_steal_share_is_the_stolen_part_of_the_interval():
+    assert harness.steal_share((10, 1000), (30, 1200)) == pytest.approx(0.1)
+    assert harness.steal_share((5, 100), (5, 100)) == 0.0
+    steal, total = harness.cpu_jiffies()
+    assert 0 <= steal <= total
 
 
 # -- space amplification ---------------------------------------------------------------------
@@ -135,27 +153,47 @@ def test_op_generator_is_seed_deterministic():
 
 
 def _blocks(seed, n_blocks):
-    ops = list(itertools.islice(kv.kv_ops(seed, 15_000), 9 * n_blocks))
-    out, cur = [], []
-    for o in ops:
-        if o.cls == "write" and cur:
-            out.append(cur)
-            cur = []
-        cur.append(o)
-    return out
+    out: dict[int, list] = {}
+    for o in itertools.islice(kv.kv_ops(seed, 15_000), len(kv.BLOCK) * n_blocks):
+        out.setdefault(o.block, []).append(o)
+    return list(out.values())
 
 
 def test_op_mix_is_the_same_for_every_seed():
     kinds = [[[o.kind for o in b] for b in _blocks(s, 12)] for s in (1, 2, 3)]
-    assert kinds[0] == kinds[1] == kinds[2]
-    for i, b in enumerate(kinds[0]):
-        assert b[0] == kv.WRITE_KINDS[i % len(kv.WRITE_KINDS)]
-        assert len(b) == len(kv.BLOCK) + (i % 3 == 2)
-    assert [o.op_id for b in _blocks(1, 12) for o in b] == list(range(sum(map(len, kinds[0]))))
+    assert kinds[0] == kinds[1] == kinds[2] == [list(kv.BLOCK)] * 12
+    assert [o.op_id for b in _blocks(1, 12) for o in b] == list(range(12 * len(kv.BLOCK)))
+
+
+def test_every_run_covers_every_op_kind():
+    """The loop stops only between blocks, so even a run whose time is up
+    after its first op runs a whole block, and a block holds every kind."""
+    every = {"put", "delete", "increment", "get", "multi_get_10", "multi_get_1000",
+             "cget", "scan", "filter_page", "filter_time"}
+    ops = kv.timed_ops(5, 15_000)
+    assert len(ops) == 16 * len(kv.BLOCK)
+    results, _wall = harness.closed_loop(ops, 0, lambda op: None)
+    assert [r.op.kind for r in results] == list(kv.BLOCK)
+    assert {r.op.kind for r in results} == every
+    # ops without a block (batch passes) stop after any op
+    passes, _wall = harness.closed_loop(itertools.islice(batch.pass_ops(), 5), 0, lambda op: None)
+    assert len(passes) == 1
+
+
+def test_reads_after_a_write_read_its_keys():
+    ops = kv.timed_ops(6, 15_000, blocks=4)
+    last = None
+    for o in ops:
+        if o.cls == "write":
+            last = o.args["keys"]
+        elif o.kind == "get":
+            assert o.args["key"] == last[0]
+        elif o.kind == "multi_get_10":
+            assert o.args["keys"] == last[:10]
 
 
 def test_cached_gets_hit_three_times_in_four_and_are_never_written():
-    ops = list(itertools.islice(kv.kv_ops(4, 15_000), 9 * 40))
+    ops = kv.timed_ops(4, 15_000, blocks=40)
     written = {k for o in ops if o.cls == "write" for k in o.args["keys"]}
     seen, hits, n = set(), 0, 0
     for o in ops:
@@ -171,9 +209,9 @@ def test_cached_gets_hit_three_times_in_four_and_are_never_written():
 
 
 def test_write_batches_cycle_sizes_and_kinds():
-    writes = [b[0] for b in _blocks(1, 13)][:12]
+    writes = [o for o in kv.timed_ops(1, 15_000, blocks=4) if o.cls == "write"]
     assert [len(o.args["keys"]) for o in writes] == list(kv.WRITE_SIZES) * 2
-    assert [o.kind for o in writes] == list(kv.WRITE_KINDS) * 2
+    assert [o.kind for o in writes] == list(kv.WRITES) * 4
     assert all(len(set(o.args["keys"])) == len(o.args["keys"]) for o in writes)
 
 
