@@ -16,6 +16,7 @@
 from __future__ import annotations
 
 import dataclasses
+import hashlib
 import math
 import os
 import statistics
@@ -53,20 +54,25 @@ def closed_loop(
     spark=None,
     after_op: Callable[[OpResult], None] | None = None,
 ) -> tuple[list[OpResult], float]:
-    """Run ``ops`` in order, one at a time, until ``seconds`` have
-    passed.  The loop only stops before an op that starts a new block,
-    so every block it begins runs to its end and at least one block
-    always runs.  Returns the per-op results and the
+    """Run ``ops`` in order, one at a time, for about ``seconds``.  The
+    loop only stops before an op that starts a new block, so every
+    block it begins runs to its end and at least one block always
+    runs; it starts a new block only while at least half a block (the
+    mean of the blocks so far) is left before the deadline, so the loop
+    ends within half a block of it.  Returns the per-op results and the
     wall-clock of the loop.  An exception fails only its own op.
     ``after_op`` sees each result after its op's clock has stopped."""
     sc = spark.sparkContext if spark is not None else None
     results: list[OpResult] = []
     t0 = time.perf_counter()
     deadline = t0 + seconds
+    blocks = 0
     for op in ops:
-        if results and time.perf_counter() >= deadline and (
-                op.block is None or op.block != results[-1].op.block):
-            break
+        if results and (op.block is None or op.block != results[-1].op.block):
+            now = time.perf_counter()
+            blocks += 1
+            if now + (now - t0) / blocks / 2 >= deadline:
+                break
         if sc is not None:
             sc.setJobGroup(job_group(op.op_id, op.kind), op.kind)
         start = time.perf_counter()
@@ -109,15 +115,16 @@ def tail(values: list[float], min_beyond: int = 10) -> tuple[float, float, int]:
 # -- host guard ------------------------------------------------------------------
 
 
-def calibration_s(spark, rows: int = 5_000_000, reps: int = 3) -> float:
-    """bench.py's constant CPU probe at a smaller row count: no I/O and
-    no data dependence, best of ``reps``."""
+def calibration_s(reps: int = 7, mb: int = 32) -> float:
+    """A constant CPU probe: SHA-256 over a fixed ``mb`` MiB buffer, in
+    this process, best of ``reps``.  It runs outside the JVM, so its time
+    does not fall as Spark's JIT warms up over a run; a change between
+    two probes is a change in what the host gives this machine."""
+    buf = bytes(range(256)) * (mb * 4096)
     best = math.inf
     for _ in range(reps):
         t0 = time.perf_counter()
-        spark.range(rows).selectExpr(
-            "bit_xor(xxhash64(cast(id * 2654435761 as string))) as h"
-        ).collect()
+        hashlib.sha256(buf).digest()
         best = min(best, time.perf_counter() - t0)
     return best
 

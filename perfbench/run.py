@@ -1,6 +1,6 @@
 """hpaste_spark benchmark: point reads, reads beside writes, batch jobs.
 
-    python3 perfbench/run.py --workload kv_mixed --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload kv_mixed --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout.  Workloads:
 
@@ -11,8 +11,8 @@ Run from the root of a checkout.  Workloads:
 
 Inputs are generated from ``--seed`` into a work directory inside the
 checkout, which is removed at the end.  One client thread times ops
-back to back for ``--seconds`` (then finishes the block of ops it is
-in); outputs are checked afterwards.  The
+back to back for about ``--seconds``, in whole blocks of ops (see
+``harness.closed_loop``); outputs are checked afterwards.  The
 last stdout line is one JSON object: ``correct``, ``attempted``,
 ``failed`` and ``metrics`` — the end-to-end metrics with ``--trace 0``;
 with ``--trace 1`` the per-layer metrics of a traced run (spans around
@@ -37,6 +37,9 @@ WORKLOADS = ("kv_mixed", "batch_pipeline")
 SF = 0.01  # scale of the generated tables: 15,000 orders
 HEAP_GB = 1  # driver JVM heap
 GUARD = 0.25  # calibration drift (slower / faster probe - 1) that triggers one re-run: the metrics' bound
+# share of the CPU time stolen by other tenants during the loop that
+# triggers one re-run: a run with 4.8 % stolen read 18 % above the median latency
+STEAL_GUARD = 0.02
 RERUN_ID = 1_000_000  # first op id of a re-run, so its ops and job groups stay apart
 WARM_PASSES = 2  # batch_pipeline: untimed passes before the timed loop
 BUDGET_S = 170.0  # a guard re-run only starts if it fits in this
@@ -72,20 +75,23 @@ class Context:
         self.cal_start = self.cal_end = math.nan
         self.steal = math.nan  # share of CPU time stolen by other tenants during the timed loop
         self.setup_s = math.nan
-        self.host_degraded = False
+        self.host_degraded = None  # why the host guard distrusts the figures, if it does
         self.tracer = None
 
     def start(self) -> None:
-        import harness
         from hpaste_spark import get_spark
 
         args = self.args
         conf = {
             "spark.ui.showConsoleProgress": "false",
             "spark.local.dir": os.path.join(self.work, "local"),
-            # a fixed-size heap: peak RSS then does not depend on when the
-            # collector decided to grow it
-            "spark.driver.extraJavaOptions": f"-Xms{HEAP_GB}g -Djava.io.tmpdir={os.path.join(self.work, 'tmp')}",
+            # a fixed-size heap, touched in full at start: peak RSS then does
+            # not depend on how much of it the collector had used when the
+            # loop ended; the parallel collector runs no concurrent threads
+            # beside the task threads, and pass times under it level off
+            # sooner and stay level
+            "spark.driver.extraJavaOptions": f"-Xms{HEAP_GB}g -XX:+AlwaysPreTouch -XX:+UseParallelGC "
+                                             f"-Djava.io.tmpdir={os.path.join(self.work, 'tmp')}",
         }
         if args.trace:
             conf.update({
@@ -97,7 +103,6 @@ class Context:
         self.spark = get_spark("perfbench", master=f"local[{self.cpus}]",
                                shuffle_partitions=self.cpus, extra_conf=conf)
         self.spark.sparkContext.setLogLevel("ERROR")
-        harness.calibration_s(self.spark, reps=1)  # compile the probe before it measures
         self.session_s = time.perf_counter() - T_START
         if args.trace:
             import tracing
@@ -118,10 +123,12 @@ class Context:
 
     def timed(self, make_ops, run_op, after_op=None):
         """The timed loop plus the host guard: calibrate before and after
-        it, and if the probes drift apart past ``GUARD`` run the loop once
-        more on a fresh op list, ``make_ops(RERUN_ID)`` (when it fits the
-        time budget).  ``setup_s`` is the process's age when the first
-        timed op starts.  Returns ``(discarded, results, wall)``."""
+        it and count the CPU time other tenants stole during it; if the
+        probes drift apart past ``GUARD`` or more than ``STEAL_GUARD`` of
+        the CPU time was stolen, run the loop once more on a fresh op
+        list, ``make_ops(RERUN_ID)`` (when it fits the time budget).
+        ``setup_s`` is the process's age when the first timed op starts.
+        Returns ``(discarded, results, wall)``."""
         import harness
 
         tr = self.tracer
@@ -133,7 +140,15 @@ class Context:
             finally:
                 tr.op_id = None
 
-        self.cal_start = harness.calibration_s(self.spark)
+        def loop(ops):
+            cpu0 = harness.cpu_jiffies()
+            out = harness.closed_loop(ops, self.args.seconds, fn, self.spark, after_op)
+            self.steal = harness.steal_share(cpu0, harness.cpu_jiffies())
+            self.loads.append(harness.load_1m())
+            self.cal_end = harness.calibration_s()
+            return out
+
+        self.cal_start = harness.calibration_s()
         if tr is not None:
             import tracing
 
@@ -143,27 +158,30 @@ class Context:
             discarded = []
             ops = make_ops(0)
             self.setup_s = time.perf_counter() - T_START
-            cpu0 = harness.cpu_jiffies()
-            results, wall = harness.closed_loop(ops, self.args.seconds, fn, self.spark, after_op)
-            self.steal = harness.steal_share(cpu0, harness.cpu_jiffies())
-            self.loads.append(harness.load_1m())
-            self.cal_end = harness.calibration_s(self.spark)
-            elapsed = time.perf_counter() - T_START
-            if harness.drift(self.cal_start, self.cal_end) > GUARD and elapsed + 2 * wall + 30 < BUDGET_S:
-                log(f"host drift: calibration {self.cal_start:.3f}s -> {self.cal_end:.3f}s; re-running the loop once")
+            results, wall = loop(ops)
+            why = self.host_trouble()
+            if why and time.perf_counter() - T_START + 2 * wall + 30 < BUDGET_S:
+                log(f"host guard: {why}; re-running the loop once")
                 discarded = results
                 self.cal_start = self.cal_end
-                cpu0 = harness.cpu_jiffies()
-                results, wall = harness.closed_loop(make_ops(RERUN_ID), self.args.seconds, fn, self.spark, after_op)
-                self.steal = harness.steal_share(cpu0, harness.cpu_jiffies())
-                self.loads.append(harness.load_1m())
-                self.cal_end = harness.calibration_s(self.spark)
-            self.host_degraded = harness.drift(self.cal_start, self.cal_end) > GUARD
+                results, wall = loop(make_ops(RERUN_ID))
+            self.host_degraded = self.host_trouble()
         finally:
             if tr is not None:
                 tr.restore()
         self.loads.append(harness.load_1m())
         return discarded, results, wall
+
+    def host_trouble(self) -> str | None:
+        """Why the host guard distrusts the last timed loop, or None."""
+        import harness
+
+        d = harness.drift(self.cal_start, self.cal_end)
+        if d > GUARD:
+            return f"calibration {self.cal_start:.3f}s -> {self.cal_end:.3f}s drifted {d:.2f} apart (guard {GUARD})"
+        if self.steal > STEAL_GUARD:
+            return f"{100 * self.steal:.1f}% of the CPU time was stolen by other tenants (guard {100 * STEAL_GUARD:.0f}%)"
+        return None
 
     def close(self) -> dict:
         """Stop Spark and wait for the JVM to exit; returns the event-log
@@ -437,9 +455,7 @@ def main(argv=None) -> int:
     log(f"host calibration {ctx.cal_start:.3f}s -> {ctx.cal_end:.3f}s, load_1m {ctx.loads}, "
         f"cpu stolen during the loop {100 * ctx.steal:.1f}%")
     if ctx.host_degraded:
-        drift = harness.drift(ctx.cal_start, ctx.cal_end)
-        log(f"host_degraded: the calibration probes drifted {drift:.2f} apart (guard {GUARD}); "
-            "the figures of this run are suspect")
+        log(f"host_degraded: {ctx.host_degraded}; the figures of this run are suspect")
     result = {
         "correct": out["failed"] == 0 and out["warm_failed"] == 0,
         "attempted": out["attempted"],

@@ -9,6 +9,7 @@ import itertools
 import json
 import os
 import sys
+import types
 
 import pytest
 
@@ -56,6 +57,24 @@ def test_drift_counts_a_slow_start_like_a_slow_end():
     assert harness.drift(0.5, 0.4) == pytest.approx(0.25)
     assert harness.drift(0.576, 0.389) > 0.25
     assert harness.drift(0.3, 0.3) == 0
+
+
+def test_host_guard_trips_on_drift_or_stolen_cpu():
+    import run
+
+    def trouble(start, end, steal):
+        return run.Context.host_trouble(types.SimpleNamespace(cal_start=start, cal_end=end, steal=steal))
+
+    assert trouble(0.030, 0.031, 0.0) is None
+    assert trouble(0.030, 0.031, run.STEAL_GUARD) is None
+    assert "stolen" in trouble(0.030, 0.031, 0.048)
+    assert "drifted" in trouble(0.030, 0.040, 0.0)
+    assert "drifted" in trouble(0.040, 0.030, 0.0)
+
+
+def test_calibration_probe_is_cpu_work_outside_spark():
+    t = harness.calibration_s(reps=2, mb=1)
+    assert 0 < t < 1
 
 
 def test_steal_share_is_the_stolen_part_of_the_interval():
@@ -178,6 +197,21 @@ def test_every_run_covers_every_op_kind():
     # ops without a block (batch passes) stop after any op
     passes, _wall = harness.closed_loop(itertools.islice(batch.pass_ops(), 5), 0, lambda op: None)
     assert len(passes) == 1
+
+
+@pytest.mark.parametrize("seconds,blocks", [(9.9, 2), (10.1, 3), (25.0, 6), (1.0, 1)])
+def test_loop_starts_a_block_only_while_half_a_block_is_left(monkeypatch, seconds, blocks):
+    """Blocks of 4 s each: a new block starts while at least 2 s are left,
+    so the loop ends within half a block of its deadline."""
+    clock = [0.0]
+    monkeypatch.setattr(harness.time, "perf_counter", lambda: clock[0])
+
+    def run(op):
+        clock[0] += 1.0
+
+    ops = [harness.Op(i, "x", "read", {}, block=i // 4) for i in range(40)]
+    results, wall = harness.closed_loop(ops, seconds, run)
+    assert len(results) == 4 * blocks and wall == 4.0 * blocks
 
 
 def test_reads_after_a_write_read_its_keys():
